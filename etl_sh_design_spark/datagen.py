@@ -29,6 +29,8 @@ import math
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark.sources.io import local_table
+
 # --- geometry constants (reference-shaped, see FIXTURES.md A3/A5) ---
 NX, NY = 54, 108                 # sensor grid columns / rows
 PITCH_X, PITCH_Y = 43.6, 22.4    # grid pitch, mm
@@ -50,7 +52,8 @@ _MOD = 1000003
 # ---------------------------------------------------------------- layers
 def layers(spark: SparkSession) -> DataFrame:
     """4-row layer dimension: (layer INT, z_mm DOUBLE)."""
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         [(i + 1, z) for i, z in enumerate(LAYER_Z_MM)], "layer INT, z_mm DOUBLE"
     )
 
@@ -198,7 +201,8 @@ def bv_curves(spark: SparkSession) -> DataFrame:
         ("HPK", "split4", 10.0, 481.91, -2544.6),
         ("HPK", "split4", 15.0, 446.32, -2338.6),
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows, "vendor STRING, variant STRING, charge_fc DOUBLE, a DOUBLE, b DOUBLE"
     )
 
@@ -245,7 +249,8 @@ def mod_partitions(spark: SparkSession) -> DataFrame:
         (25, 2, [7, 3]),
         (26, 1, [6]),
     ]
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         rows, "row_ordinal INT, n_boards INT, flavors ARRAY<INT>"
     )
 

@@ -41,6 +41,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark.sources.io import local_table
+
 
 def _union_find_components(edge_rows, nodes: DataFrame, node_col: str) -> DataFrame:
     """Driver-side path-compressed union-find over a collected edge
@@ -73,7 +75,8 @@ def _union_find_components(edge_rows, nodes: DataFrame, node_col: str) -> DataFr
     all_nodes = nodes.select(F.col(node_col).alias("node"))
     if not labels:
         return all_nodes.withColumn("component", F.col("node"))
-    lab_df = spark.createDataFrame(
+    lab_df = local_table(
+        spark,
         labels, schema=nodes.select(F.col(node_col).alias("node")).schema.add("component", nodes.schema[node_col].dataType)
     )
     return all_nodes.join(F.broadcast(lab_df), "node", "left").select(

@@ -19,6 +19,8 @@ from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 
+from etl_sh_design_spark.sources.io import local_table
+
 MAX_N = 60
 DEFAULT_FLAVORS = (7, 6, 3)
 
@@ -53,7 +55,8 @@ def partition_rows(max_n: int = MAX_N, flavors: tuple[int, ...] = DEFAULT_FLAVOR
 
 
 def partition_lookup(spark: SparkSession, max_n: int = MAX_N) -> DataFrame:
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         partition_rows(max_n),
         "n INT, ordinal INT, flavor INT, n_boards INT, covered INT",
     )

@@ -20,6 +20,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window as W
 from pyspark.sql import functions as F
 
+from etl_sh_design_spark.sources.io import local_table
+
 # ------------------------------------------------------------- panels
 # Session memo for the GEMM probe-panel broadcasts (round 13, closes
 # VERDICT r12 "What's wrong" #3): every GEMM query CONSTRUCTION used to
@@ -167,7 +169,7 @@ def cosine_topk(
         queries.select(id_col, vec_col), f"cosine_topk:{id_col}:{vec_col}", _build
     )
     if n_panel == 0:
-        return spark.createDataFrame([], "qid bigint, cid bigint, cos double, rk int")
+        return local_table(spark, [], "qid bigint, cid bigint, cos double, rk int")
     kk = int(k)
 
     def fn(batches):
@@ -521,7 +523,7 @@ def embedding_near_dup_pairs(
         df.select(id_col, vec_col), f"near_dup:{id_col}:{vec_col}", _build
     )
     if n_panel == 0:  # empty corpus: stable empty result
-        return spark.createDataFrame([], "id_a bigint, id_b bigint, cos double")
+        return local_table(spark, [], "id_a bigint, id_b bigint, cos double")
 
     def fn(batches):
         import pandas as pd

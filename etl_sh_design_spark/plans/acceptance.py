@@ -34,6 +34,7 @@ from etl_sh_design_spark.operators.containment import (
     containment_join,
 )
 from etl_sh_design_spark.operators.histogram import BinSpec
+from etl_sh_design_spark.sources.io import local_table
 
 ETA_BINS = BinSpec(20, datagen.ETA_LO, datagen.ETA_HI)
 T_COEFF = 45.0  # ps; dee_geometry.py:608
@@ -224,7 +225,8 @@ def real_layout_sensors(
     """The hot corner table (layer, x, y, ax1, ax2, ay1, ay2) derived
     from the REAL layout database via the P3/P4 inset — same schema the
     synthetic `datagen.sensors` feeds the containment join."""
-    centers = spark.createDataFrame(
+    centers = local_table(
+        spark,
         real_layout_sensor_rows(yaml_path, layout), "layer INT, x DOUBLE, y DOUBLE"
     )
     return centers.select(
@@ -261,9 +263,9 @@ def real_ray_hits(
     if strategy == "binned":
         # cell >= the 41.5mm max active extent -> <=2 cells per axis.
         # The corner table is dimension-sized by the layout contract
-        # but createDataFrame-sourced (no stats) — pin the broadcast
-        # so the 4x-rays proj side never shuffles (138->19 MB at 1e6
-        # rays, see binned_containment_join docstring).
+        # — pin the broadcast so the 4x-rays proj side never shuffles
+        # (138->19 MB at 1e6 rays, see binned_containment_join
+        # docstring).
         hits = binned_containment_join(
             proj, sensors, cell=50.0, extra_keys=["layer"], broadcast_rects=True
         )
@@ -460,7 +462,8 @@ def multi_variant_acceptance(
     rays = datagen.rays(spark, n_rays).filter(F.col("eta") < F.lit(REAL_ETA_BINS.hi))
     bin_col = REAL_ETA_BINS.bin_of("eta").alias("eta_bin")
     bin_tot = rays.groupBy(bin_col).agg(F.count(F.lit(1)).alias("n_rays"))
-    vdim = per_hit.sparkSession.createDataFrame(
+    vdim = local_table(
+        per_hit.sparkSession,
         [(v,) for v in variants], "variant STRING"
     )
     grid = bin_tot.crossJoin(F.broadcast(vdim))
@@ -559,7 +562,7 @@ def multi_variant_hit_histogram(
     pos = per_hit.groupBy(
         "variant", F.col("n").cast("bigint").alias("n")
     ).agg(F.count(F.lit(1)).alias("cnt"))
-    vdim = spark.createDataFrame([(v,) for v in variants], "variant STRING")
+    vdim = local_table(spark, [(v,) for v in variants], "variant STRING")
     sums = pos.groupBy("variant").agg(
         F.sum("cnt").alias("n_hit"), F.sum(F.col("n") * F.col("cnt")).alias("sum_n")
     )

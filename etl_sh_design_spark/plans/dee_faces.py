@@ -62,6 +62,7 @@ from etl_sh_design_spark.operators.partition import (
     partition_lookup,
 )
 from etl_sh_design_spark.operators.polygon import _ray_cast, _segment_intersects_rect
+from etl_sh_design_spark.sources.io import local_table
 
 ETL_OUTER = 1185.0
 NOSE_R = 302.0
@@ -360,7 +361,8 @@ def config_slots_plan(
             return sm_w / 2 - rb_w / 2 if ori == "above" else sm_w / 2 - pb_w - rb_w / 2
         return -sm_w / 2 + pb_w / 2 if ori == "above" else sm_w / 2 - pb_w / 2
 
-    face_dim = spark.createDataFrame(
+    face_dim = local_table(
+        spark,
         [
             (label, _y0(ori, cen), (-pb_w / 2 if ori == "above" else pb_w / 2))
             for label, ori, cen in faces
@@ -554,7 +556,8 @@ def _partition_lookup_for(spark: SparkSession, flavors: tuple[int, ...]) -> Data
         return partition_lookup(spark)
     from etl_sh_design_spark.operators.partition import partition_rows
 
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         partition_rows(60, tuple(sorted(flavors, reverse=True))),
         "n INT, ordinal INT, flavor INT, n_boards INT, covered INT",
     )
@@ -607,7 +610,8 @@ def multi_config_module_totals_no_maybe(
                     r_in, r_out, n_rows, n_cols, n_rows // 2, fl_id,
                 )
             )
-    cfg_dim = spark.createDataFrame(
+    cfg_dim = local_table(
+        spark,
         dim_rows,
         "config STRING, face STRING, y0 DOUBLE, x0 DOUBLE, col_step DOUBLE,"
         " mod_h DOUBLE, r_in DOUBLE, r_out DOUBLE, n_rows INT, n_cols INT,"
@@ -795,7 +799,7 @@ def face_orientation_dim(spark: SparkSession) -> DataFrame:
         (face, face_y0(ori, cen), 1.0 if ori == "above" else -1.0)
         for face, (ori, cen, _r) in FACE_CONFIGS.items()
     ]
-    return spark.createDataFrame(rows, "face STRING, y0 DOUBLE, osign DOUBLE")
+    return local_table(spark, rows, "face STRING, y0 DOUBLE, osign DOUBLE")
 
 
 def boards_from_supermodules(sm: DataFrame, face_dim: DataFrame) -> DataFrame:

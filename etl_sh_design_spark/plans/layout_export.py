@@ -21,12 +21,11 @@ SENSOR_GAP = 0.3  # inter-sensor gap
 
 def modules_to_sensor_centers(modules: DataFrame) -> DataFrame:
     """Each module center (x, y) -> two sensor centers at
-    y ± (gap + sensor_w) / 2 (module = 1x2 sensor stack)."""
+    y ± (gap + sensor_w) / 2 (module = 1x2 sensor stack); the other
+    columns are carried along."""
     off = (SENSOR_GAP + SENSOR_W) / 2.0
-    return modules.select(
-        "module",
-        "x",
-        F.explode(F.array(F.col("y") - off, F.col("y") + off)).alias("y"),
+    return modules.withColumn(
+        "y", F.explode(F.array(F.col("y") - off, F.col("y") + off))
     )
 
 
@@ -37,20 +36,21 @@ def export_layout(
     layout: str = "new",
 ) -> DataFrame:
     """Full §3.3 pipeline. tsv_paths maps (disk, face) -> TSV path.
-    Returns the assembled centers DataFrame (also written to YAML)."""
-    parts = []
-    for (disk, face), path in tsv_paths.items():
-        clean, _bad = src.split_corrupt(src.read_face_tsv(spark, path))
-        centers = modules_to_sensor_centers(clean).select(
-            F.lit(layout).alias("layout"),
-            F.lit(disk).alias("disk"),
-            F.lit(face).alias("face"),
-            "x",
-            "y",
+    Returns the assembled centers DataFrame (also written to YAML).
+    The faces are unioned before the corrupt-row split, so a single
+    parse covers them all."""
+    faces = [
+        src.read_face_tsv(spark, path).select(
+            F.lit(disk).alias("disk"), F.lit(face).alias("face"), "*"
         )
-        parts.append(centers)
-    out = parts[0]
-    for p in parts[1:]:
-        out = out.unionByName(p)
+        for (disk, face), path in tsv_paths.items()
+    ]
+    modules = faces[0]
+    for f in faces[1:]:
+        modules = modules.unionByName(f)
+    clean, _bad = src.split_corrupt(modules)
+    out = modules_to_sensor_centers(clean).select(
+        F.lit(layout).alias("layout"), "disk", "face", "x", "y"
+    )
     src.write_yaml_layout(out, yaml_out)
     return out

@@ -29,6 +29,7 @@ from pyspark.sql import DataFrame, SparkSession, Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.operators.partition import PARTITION_LOOKUP_SQL, partition_lookup
+from etl_sh_design_spark.sources.io import local_table
 
 # slot grid: right half-dee, rows of module slots
 N_ROWS, N_COLS = 22, 27
@@ -139,7 +140,8 @@ def _slots_build(spark: SparkSession) -> DataFrame:
 
 
 def slots_blocked_table(spark: SparkSession) -> DataFrame:
-    return spark.createDataFrame(
+    return local_table(
+        spark,
         BLOCKED, "kind STRING, bx1 DOUBLE, bx2 DOUBLE, by1 DOUBLE, by2 DOUBLE"
     )
 
@@ -308,7 +310,8 @@ def slots_real(
         n_blocked = rects_overlap_count(grid, polys)
     elif geometry == "bbox":
         bb = F.broadcast(
-            spark.createDataFrame(
+            local_table(
+                spark,
                 polygon_bboxes(polys),
                 "kind STRING, bx1 DOUBLE, bx2 DOUBLE, by1 DOUBLE, by2 DOUBLE",
             )

@@ -37,6 +37,7 @@ from etl_sh_design_spark.operators.similarity import (
     lsh_bucket_topk,
 )
 from etl_sh_design_spark.registry import _t, query
+from etl_sh_design_spark.sources.io import local_table
 
 # ---------------------------------------------------------------- corpora
 _TOKS = "filter(split(lower(text), '\\\\s+'), t -> t != '')"
@@ -912,7 +913,8 @@ GROUP BY 1
 def q_bv_zones(spark, sf_dir):
     """J8 range-join: sensor radius -> first enclosing BV zone, with
     per-zone current stats (bias_voltage.ipynb get_n_BV semantics)."""
-    zones = spark.createDataFrame(
+    zones = local_table(
+        spark,
         [(1, 0.0, 400.0), (2, 400.0, 520.0), (3, 520.0, 700.0), (4, 700.0, 900.0), (5, 900.0, 1300.0)],
         "zone INT, lo DOUBLE, hi DOUBLE",
     )

@@ -40,6 +40,7 @@ from etl_sh_design_spark.registry_r5 import (
     _TOKS,
     _TOKS_DUCK,
 )
+from etl_sh_design_spark.sources.io import local_table
 
 # --------------------------------------------------------------------
 # shared oracle fragments
@@ -110,7 +111,7 @@ def budget_prefix_select(spark, scored, frac_num: int = 2, frac_den: int = 5):
     for pid, tok in subtotals:
         offsets.append((pid, acc))
         acc += tok
-    off_df = spark.createDataFrame(offsets, schema="pid int, _offset long")
+    off_df = local_table(spark, offsets, schema="pid int, _offset long")
     wloc = W.partitionBy("pid").orderBy(F.col("score").desc(), F.col("doc_id"))
     cum = (
         parts.withColumn(

@@ -37,7 +37,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.operators.similarity import _dot, _dvec, _norm, cosine_topk
-from etl_sh_design_spark.registry import _t, query
+from etl_sh_design_spark.registry import _t, query, reference_query
 
 # Exploded (vec_id, d, v) view of embeddings, double-widened — same
 # spelling as registry_ext._VE, kept local so the two modules stay
@@ -1174,31 +1174,8 @@ _FACE_READ_DUCK = f"""
     AND try_cast(y AS DOUBLE) IS NOT NULL AND try_cast(z AS DOUBLE) IS NOT NULL
 """
 
-# The reference-artifact parity queries only register when the
-# reference checkout is actually present (env SPARK_GRAFT_REF_DIR,
-# default /root/reference) — mirroring the pytest skipif, so the
-# registry imports and replays cleanly in any environment.
-_HAVE_REF_FACES = all(
-    os.path.isfile(os.path.join(_REF_DIR, "data", f"Face {i}.txt"))
-    for i in (1, 2, 3, 4)
-)
 
-
-def _query_if(cond, name, sql):
-    """Register under @query only when `cond`; otherwise leave the
-    function unregistered (rows-only absent, per VERDICT r5 item 1).
-    `sql` may be a zero-arg callable so reference-derived oracle
-    strings (which read reference files) are only built when the
-    checkout is actually present."""
-    if cond:
-        if callable(sql):
-            sql = sql()
-        return query(name, sql)
-    return lambda fn: fn
-
-
-@_query_if(
-    _HAVE_REF_FACES,
+@reference_query(
     "real_face_physics",
     f"""
 WITH faces AS (

@@ -12,7 +12,7 @@ layout, oracle-checked against DuckDB (geometric_acceptance.ipynb
 cells 43-72 is the reference loop being re-expressed).
 
 Registration is gated on the reference checkout being present
-(SPARK_GRAFT_REF_DIR, default /root/reference), mirroring
+(`sources.io.reference_dir`) through `registry.reference_query`, like
 `real_face_physics`.
 """
 
@@ -21,23 +21,17 @@ from __future__ import annotations
 import os
 
 from etl_sh_design_spark.plans import acceptance, tiling
-from etl_sh_design_spark.registry import N_RAYS, query
-from etl_sh_design_spark.registry_r5c import _query_if
-from etl_sh_design_spark.sources.io import reference_dir
+from etl_sh_design_spark.registry import N_RAYS, query, reference_query
+from etl_sh_design_spark.sources.io import local_table, reference_dir
 
 _REF_DIR = reference_dir()
 _NEW_YAML = os.path.join(_REF_DIR, "layouts", "database_new.yaml")
 _TDR_YAML = os.path.join(_REF_DIR, "layouts", "database_TDR.yaml")
-_HAVE_NEW_YAML = os.path.isfile(_NEW_YAML)
-_HAVE_TDR_YAML = os.path.isfile(_TDR_YAML)
 
 
-@_query_if(
-    _HAVE_NEW_YAML,
+@reference_query(
     "real_acceptance_profile",
-    acceptance.real_acceptance_profile_sql(N_RAYS, _NEW_YAML)
-    if _HAVE_NEW_YAML
-    else None,
+    lambda: acceptance.real_acceptance_profile_sql(N_RAYS, _NEW_YAML),
 )
 def q_real_acceptance_profile(spark, sf_dir):
     """MC geometric acceptance over the REAL 'new' layout: per eta bin
@@ -52,12 +46,9 @@ def q_real_acceptance_profile(spark, sf_dir):
     return acceptance.real_acceptance_profile(spark, N_RAYS, _NEW_YAML, "new")
 
 
-@_query_if(
-    _HAVE_TDR_YAML,
+@reference_query(
     "real_tdr_hit_histogram",
-    acceptance.real_hit_count_histogram_sql(N_RAYS, _TDR_YAML, "TDR")
-    if _HAVE_TDR_YAML
-    else None,
+    lambda: acceptance.real_hit_count_histogram_sql(N_RAYS, _TDR_YAML, "TDR"),
 )
 def q_real_tdr_hit_histogram(spark, sf_dir):
     """Hist1D(nHits) over the REAL TDR layout (`database_TDR.yaml`,
@@ -206,8 +197,7 @@ def _d2_centers(spark):
     ).select("x", "y")
 
 
-@_query_if(
-    _HAVE_NEW_YAML,
+@reference_query(
     "real_occupancy_bandwidth",
     lambda: f"""
 WITH c AS ({_d2_centers_sql()}),
@@ -299,8 +289,7 @@ from etl_sh_design_spark.operators.partition import (  # noqa: E402
 )
 
 
-@_query_if(
-    _HAVE_NEW_YAML,
+@reference_query(
     "real_partition_flavors",
     lambda: f"""
 WITH c AS ({_d2_centers_sql()}),
@@ -426,7 +415,8 @@ def real_sm_modules(spark, modify_partitions: bool = False):
     supermodule-sliced real modules (p = 0-based x-ordered position
     within the SM)."""
     mods = _real_modules(spark)
-    slices = spark.createDataFrame(
+    slices = local_table(
+        spark,
         _sm_slices(modify_partitions),
         "row_ord INT, sm_idx INT, start INT, n_mod INT",
     )
@@ -567,7 +557,7 @@ GROUP BY s.config
 """
 
 
-@_query_if(_HAVE_NEW_YAML, "real_bv_study", _real_bv_sql)
+@reference_query("real_bv_study", _real_bv_sql)
 def q_real_bv_study(spark, sf_dir):
     """The bias_voltage.py study over the REAL layout: build the D2
     x>0 modules and the study's supermodules (partition-table slices
@@ -591,7 +581,7 @@ def q_real_bv_study(spark, sf_dir):
     dimension-sized shuffle; the same shape would run on a
     billion-module layout by keying the masks join on (row, sm)."""
     smm = real_sm_modules(spark)
-    cfg = spark.createDataFrame(_BV_CONFIGS, "config STRING, a DOUBLE, b DOUBLE")
+    cfg = local_table(spark, _BV_CONFIGS, "config STRING, a DOUBLE, b DOUBLE")
     minseg = bv_min_segments(smm, cfg)
     prob = (
         smm.select("row_ord", "sm_idx", "p", "r_min", "r_max")
@@ -621,8 +611,7 @@ def q_real_bv_study(spark, sf_dir):
     )
 
 
-@_query_if(
-    _HAVE_NEW_YAML,
+@reference_query(
     "real_module_rows",
     lambda: f"""
 WITH c AS ({_d2_centers_sql()}),
@@ -668,7 +657,8 @@ def q_real_module_rows(spark, sf_dir):
     real_rows = paired.groupBy("row_ord").agg(
         (F.count(F.lit(1)) / 2).cast("bigint").alias("n_modules_real")
     )
-    mp = spark.createDataFrame(
+    mp = local_table(
+        spark,
         [(o, y, n, sum(fl)) for o, y, n, fl in _OCC_MOD_PARTITIONS],
         "row_ord INT, y_top DOUBLE, n_boards INT, n_modules_partition INT",
     )
@@ -727,10 +717,6 @@ def q_embedding_neardup_blocked(spark, sf_dir):
 # --------------------------------------------------------------------
 _FACE_DISK = [(1, "disk1", "front"), (2, "disk1", "back"),
               (3, "disk2", "front"), (4, "disk2", "back")]
-_HAVE_EXPORT = _HAVE_NEW_YAML and all(
-    os.path.isfile(os.path.join(_REF_DIR, "data", f"Face {i}.txt"))
-    for i, _, _ in _FACE_DISK
-)
 
 
 def _shipped_values_sql() -> str:
@@ -778,7 +764,7 @@ FROM j GROUP BY 1, 2
 """
 
 
-@_query_if(_HAVE_EXPORT, "real_export_centers_check", _export_check_sql)
+@reference_query("real_export_centers_check", _export_check_sql)
 def q_real_export_centers_check(spark, sf_dir):
     """Export-pipeline parity (realistic_layout_export.ipynb cells
     2-13): derive the sensor centers from the reference's shipped

@@ -29,9 +29,8 @@ from pyspark.sql import functions as F
 
 from etl_sh_design_spark import datagen
 from etl_sh_design_spark.plans import acceptance, dee_faces
-from etl_sh_design_spark.registry import N_RAYS, query
-from etl_sh_design_spark.registry_r5c import _query_if
-from etl_sh_design_spark.sources.io import reference_dir
+from etl_sh_design_spark.registry import N_RAYS, query, reference_query
+from etl_sh_design_spark.sources.io import local_table, reference_dir
 
 # ---------------------------------------------------------------------
 # golden-derived pinned counts for the real 'updated'/'S' tiling
@@ -175,7 +174,8 @@ def _notebook_pins_plan(spark):
             ),
         ],
     )
-    out_dim = spark.createDataFrame(
+    out_dim = local_table(
+        spark,
         [
             ("example_modules_x4", "large", 4),
             ("ga_large_module_x2", "large", 2),
@@ -284,7 +284,8 @@ def q_boards_rollup(spark, sf_dir):
     split with right-alignment (shifter 0 only for flavor 6), and the
     above/below orientation mirroring (ETL.py:163-204, 352-357,
     506-533). Pure explode arithmetic, no UDF, broadcast face dim."""
-    spark_sm = spark.createDataFrame(
+    spark_sm = local_table(
+        spark,
         _SM_FIXTURE, "face STRING, iy INT, sm_start INT, flavor INT"
     )
     b = dee_faces.boards_from_supermodules(
@@ -314,7 +315,6 @@ def q_boards_rollup(spark, sf_dir):
 _REF_DIR = reference_dir()
 _NEW_YAML = os.path.join(_REF_DIR, "layouts", "database_new.yaml")
 _TDR_YAML = os.path.join(_REF_DIR, "layouts", "database_TDR.yaml")
-_HAVE_YAMLS = os.path.isfile(_NEW_YAML) and os.path.isfile(_TDR_YAML)
 
 
 _MV_VARIANTS_MEMO: dict[str, dict] = {}
@@ -375,19 +375,16 @@ def _variant_corner_sql(yaml_path: str, layout: str) -> str:
     )
 
 
-@_query_if(
-    _HAVE_YAMLS,
+@reference_query(
     "acceptance_multi_variant",
-    acceptance.multi_variant_acceptance_sql(
+    lambda: acceptance.multi_variant_acceptance_sql(
         N_RAYS,
         {
             "new": _variant_corner_sql(_NEW_YAML, "new"),
             "TDR": _variant_corner_sql(_TDR_YAML, "TDR"),
             "synthetic": f"SELECT layer, ax1, ax2, ay1, ay2 FROM ({datagen.SENSORS_SQL})",
         },
-    )
-    if _HAVE_YAMLS
-    else None,
+    ),
 )
 def q_acceptance_multi_variant(spark, sf_dir):
     """N-variant acceptance profile from ONE ray scan: the 'new' and
@@ -404,19 +401,16 @@ def q_acceptance_multi_variant(spark, sf_dir):
     )
 
 
-@_query_if(
-    _HAVE_YAMLS,
+@reference_query(
     "acceptance_multi_variant_hist",
-    acceptance.multi_variant_hit_histogram_sql(
+    lambda: acceptance.multi_variant_hit_histogram_sql(
         N_RAYS,
         {
             "new": _variant_corner_sql(_NEW_YAML, "new"),
             "TDR": _variant_corner_sql(_TDR_YAML, "TDR"),
             "synthetic": f"SELECT layer, ax1, ax2, ay1, ay2 FROM ({datagen.SENSORS_SQL})",
         },
-    )
-    if _HAVE_YAMLS
-    else None,
+    ),
 )
 def q_acceptance_multi_variant_hist(spark, sf_dir):
     """Per-(variant, n) hit-count histogram + per-variant mean from

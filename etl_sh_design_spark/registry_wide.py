@@ -15,6 +15,7 @@ from pyspark.sql import Window as W
 from pyspark.sql import functions as F
 
 from etl_sh_design_spark.registry import _t, query
+from etl_sh_design_spark.sources.io import local_table
 
 
 @query(
@@ -168,7 +169,7 @@ def q_ntile(spark, sf_dir):
     for pid, cnt in counts:
         offsets.append((pid, acc))
         acc += cnt
-    off_df = spark.createDataFrame(offsets, schema="pid int, _offset long")
+    off_df = local_table(spark, offsets, schema="pid int, _offset long")
     wlocal = W.partitionBy("pid").orderBy("c_acctbal", "c_custkey")
     ranked = (
         parts.withColumn("_lrk", F.row_number().over(wlocal))

@@ -3,9 +3,11 @@
 - S1 TSV module-centers scan: explicit schema, PERMISSIVE mode with a
   corrupt-record column (replacing the reference's per-row try/except,
   realistic_layout_export.ipynb cell 10), trimmed column names.
-- S3 YAML layout-database scan: driver-side yaml.safe_load of the
+- S3 YAML layout-database scan: driver-side libyaml safe load of the
   nested {layout: {disk: {face: [(x, y), ...]}}} map, flattened to rows
   (the dict is dimension-sized; at scale convert once to Parquet).
+- Driver-side dimension tables (`local_table`): Python rows shipped to
+  the JVM as one Arrow relation.
 - S4 YAML layout sink (small dimension export only).
 - S5 mirrored-centers CSV sink: (x, y) U (-x, y).
 - S6 Parquet result cache: append partitioned by run_name, re-read by
@@ -15,7 +17,10 @@
 
 from __future__ import annotations
 
+import hashlib
 import os
+from collections.abc import Iterable, Sequence
+from functools import lru_cache
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -26,6 +31,36 @@ def reference_dir() -> str:
     queries/tests (env SPARK_GRAFT_REF_DIR, default /root/reference).
     Callers must tolerate the directory being absent."""
     return os.environ.get("SPARK_GRAFT_REF_DIR", "/root/reference")
+
+
+def local_table(
+    spark: SparkSession, rows: Iterable[Sequence], schema: str | T.StructType
+) -> DataFrame:
+    """A driver-side dimension table: `rows` (tuples in `schema` order;
+    `schema` a DDL string or a StructType) as a JVM-local relation.
+
+    The rows are packed column by column into a pyarrow.Table typed from
+    the Spark schema and handed to the JVM as Arrow batches, so the plan
+    reads a LocalTableScan (which carries size statistics) and running
+    it starts no Python worker. `spark.createDataFrame(list)` would
+    instead plan an ExistingRDD scan over a parallelized Python list,
+    which forks the PySpark workers on every action. This path does not
+    depend on `spark.sql.execution.arrow.pyspark.enabled` and keeps
+    nulls, arrays, empty inputs and exact INT/BIGINT types. It does not
+    go through pandas: without the Arrow config a pandas frame falls
+    back to the row path, which turns a None in an INT column into NaN
+    and fails."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    struct = schema if isinstance(schema, T.StructType) else T.DataType.fromDDL(schema)
+    arrow_schema = to_arrow_schema(struct)
+    columns = list(zip(*rows, strict=True)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema, strict=True)],
+        schema=arrow_schema,
+    )
+    return spark.createDataFrame(table, struct)
 
 
 FACE_SCHEMA = T.StructType(
@@ -82,10 +117,15 @@ def read_face_tsv(spark: SparkSession, path: str) -> DataFrame:
 def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Clean rows vs quarantined rows (the skip-and-report pattern).
 
-    Spark disallows filtering on ONLY the corrupt column of a raw CSV
-    scan (QUERY_ONLY_CORRUPT_RECORD_COLUMN) — cache the parsed result
-    first, as the error message itself prescribes."""
-    df = df.cache()
+    A raw CSV/JSON scan parses only the columns a query needs: a query
+    on ONLY the corrupt column is disallowed
+    (QUERY_ONLY_CORRUPT_RECORD_COLUMN), and a malformed field the query
+    does not read would not mark its row corrupt. Both sides therefore
+    read one full parse, cut from the scan by a lazy local checkpoint:
+    it is built fresh per call (a file rewritten at the same path is
+    re-read, which `df.cache()` would serve stale from the session
+    cache) and its blocks go with the DataFrames, not with the session."""
+    df = df.localCheckpoint(eager=False)
     clean = df.filter(F.col("_corrupt_record").isNull()).drop("_corrupt_record")
     bad = df.filter(F.col("_corrupt_record").isNotNull()).select("_corrupt_record")
     return clean, bad
@@ -93,41 +133,50 @@ def split_corrupt(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
 def load_yaml_layout_rows(path: str) -> list[tuple[str, str, str, float, float]]:
     """Driver-side flatten of a nested YAML layout database to
-    (layout, disk, face, x, y) tuples, memoized per path (the parse is
-    ~1 s for the reference's shipped files and several consumers — the
-    Spark scan AND the DuckDB-oracle VALUES builder — need the same
-    rows).
-
-    The reference's shipped `layouts/database_*.yaml` serialize centers
-    with `!!python/tuple` tags (python yaml.dump of tuples), which the
-    safe loader rejects. A SafeLoader subclass adds ONLY a tuple
-    constructor — still no arbitrary-object construction."""
+    (layout, disk, face, x, y) tuples, memoized per path and content
+    (several consumers — the Spark scan AND the DuckDB-oracle VALUES
+    builder — need the same rows). The memo keeps one entry per path,
+    keyed by a digest of the file's bytes, so a rewritten file is
+    parsed again."""
+    with open(path, "rb") as fh:
+        raw = fh.read()
+    digest = hashlib.blake2b(raw, digest_size=16).digest()
     cached = _YAML_ROWS_CACHE.get(path)
-    if cached is not None:
-        return cached
+    if cached is not None and cached[0] == digest:
+        return cached[1]
     import yaml
 
-    class _LayoutLoader(yaml.SafeLoader):
-        pass
-
-    _LayoutLoader.add_constructor(
-        "tag:yaml.org,2002:python/tuple",
-        lambda loader, node: tuple(loader.construct_sequence(node)),
-    )
-
-    with open(path) as fh:
-        data = yaml.load(fh, Loader=_LayoutLoader)
+    data = yaml.load(raw, Loader=_layout_loader())
     rows = []
     for layout, disks in data.items():
         for disk, faces in disks.items():
             for face, centers in faces.items():
                 for x, y in centers:
                     rows.append((str(layout), str(disk), str(face), float(x), float(y)))
-    _YAML_ROWS_CACHE[path] = rows
+    _YAML_ROWS_CACHE[path] = (digest, rows)
     return rows
 
 
-_YAML_ROWS_CACHE: dict[str, list] = {}
+@lru_cache(maxsize=None)
+def _layout_loader():
+    """The libyaml safe loader (pure-Python SafeLoader when PyYAML is
+    built without libyaml) plus ONLY a `!!python/tuple` constructor:
+    the reference's shipped `layouts/database_*.yaml` serialize centers
+    as tuples (python yaml.dump), which the safe loader rejects. Still
+    no arbitrary-object construction."""
+    import yaml
+
+    class _LayoutLoader(getattr(yaml, "CSafeLoader", yaml.SafeLoader)):
+        pass
+
+    _LayoutLoader.add_constructor(
+        "tag:yaml.org,2002:python/tuple",
+        lambda loader, node: tuple(loader.construct_sequence(node)),
+    )
+    return _LayoutLoader
+
+
+_YAML_ROWS_CACHE: dict[str, tuple[bytes, list]] = {}
 
 
 def derive_sensor_centers(
@@ -170,8 +219,9 @@ def export_layout_database(
 
 def read_yaml_layout(spark: SparkSession, path: str) -> DataFrame:
     """S3: nested YAML layout database -> (layout, disk, face, x, y)
-    rows. Dimension-sized; loaded driver-side then parallelized."""
-    return spark.createDataFrame(
+    rows. Dimension-sized; loaded driver-side into a local relation."""
+    return local_table(
+        spark,
         load_yaml_layout_rows(path),
         "layout STRING, disk STRING, face STRING, x DOUBLE, y DOUBLE",
     )
@@ -188,8 +238,9 @@ def write_yaml_layout(df: DataFrame, path: str) -> None:
             row["face"], []
         ).append([row["x"], row["y"]])
     os.makedirs(os.path.dirname(path) or ".", exist_ok=True)
+    # libyaml's emitter writes the same bytes as yaml.safe_dump, faster
     with open(path, "w") as fh:
-        yaml.safe_dump(nested, fh)
+        yaml.dump(nested, fh, Dumper=getattr(yaml, "CSafeDumper", yaml.SafeDumper))
 
 
 def write_mirrored_centers_csv(df: DataFrame, path: str) -> None:

@@ -156,3 +156,68 @@ def test_overlap_excludes_what_center_test_keeps(spark):
     by_overlap = {r["slot_id"] for r in filter_blocked_polygons_overlap(slots, tri).collect()}
     assert by_center == {0, 1}   # center test wrongly keeps slot 0
     assert by_overlap == {1}     # overlap test excludes it
+
+
+def test_yaml_rows_reparsed_after_rewrite(tmp_path):
+    """The YAML-rows memo is keyed by content: a file rewritten at the
+    same path with other centers yields the new rows."""
+    path = tmp_path / "layout.yaml"
+    path.write_text("new:\n  disk1:\n    front: [[1.0, 2.0]]\n")
+    assert src.load_yaml_layout_rows(str(path)) == [("new", "disk1", "front", 1.0, 2.0)]
+    path.write_text("new:\n  disk1:\n    front: [[3.0, 4.0], [5.0, 6.0]]\n")
+    assert src.load_yaml_layout_rows(str(path)) == [
+        ("new", "disk1", "front", 3.0, 4.0),
+        ("new", "disk1", "front", 5.0, 6.0),
+    ]
+
+
+def test_yaml_rows_parse_python_tuple_tags(tmp_path):
+    """Centers written by python yaml.dump of tuples carry
+    `!!python/tuple` tags; the layout loader accepts exactly those."""
+    path = tmp_path / "tuples.yaml"
+    path.write_text(
+        "TDR:\n  disk2:\n    back:\n    - !!python/tuple\n      - -7.5\n      - 12.25\n"
+    )
+    assert src.load_yaml_layout_rows(str(path)) == [("TDR", "disk2", "back", -7.5, 12.25)]
+
+
+def test_yaml_export_bytes_match_safe_dump(spark, tmp_path):
+    import yaml
+
+    rows = [
+        ("new", "disk1", "front", 10.0, 20.25),
+        ("new", "disk1", "front", -1e-7, 3.0e12),
+        ("new", "disk2", "back", 0.1, -0.3),
+        ("TDR", "disk1", "back", 7.0, 1.0 / 3.0),
+    ]
+    df = spark.createDataFrame(rows, "layout STRING, disk STRING, face STRING, x DOUBLE, y DOUBLE")
+    out = tmp_path / "layout.yaml"
+    src.write_yaml_layout(df, str(out))
+    nested: dict = {}
+    for lo, d, f, x, y in rows:
+        nested.setdefault(lo, {}).setdefault(d, {}).setdefault(f, []).append([x, y])
+    assert out.read_text() == yaml.safe_dump(nested)
+
+
+def test_face_tsv_rewrite_is_reread_and_nothing_stays_cached(spark, tmp_path):
+    """A face TSV rewritten at the same path is read again (no stale
+    session-cache rows), export_layout pins no cached scan, and a
+    malformed field the query does not select still quarantines its
+    row."""
+    from pyspark import StorageLevel
+
+    from etl_sh_design_spark.plans import layout_export
+
+    path = tmp_path / "face.txt"
+    path.write_text("Module\tX\tY\tZ\n1\t1.0\t2.0\t3.0\n2\t4.0\t5.0\tnot_z\n")
+    clean, bad = src.split_corrupt(src.read_face_tsv(spark, str(path)))
+    assert [tuple(r) for r in clean.select("module", "x").collect()] == [(1, 1.0)]
+    assert bad.count() == 1
+
+    path.write_text("Module\tX\tY\tZ\n7\t8.0\t9.0\t10.0\n")
+    clean, bad = src.split_corrupt(src.read_face_tsv(spark, str(path)))
+    assert [tuple(r) for r in clean.collect()] == [(7, 8.0, 9.0, 10.0)]
+    assert bad.count() == 0
+
+    layout_export.export_layout(spark, {("disk1", "front"): str(path)}, str(tmp_path / "out.yaml"))
+    assert src.read_face_tsv(spark, str(path)).storageLevel == StorageLevel.NONE

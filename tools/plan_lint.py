@@ -47,6 +47,8 @@ import sys
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from etl_sh_design_spark.registry import REFERENCE_GATED, reference_present  # noqa: E402
+
 # ---------------------------------------------------------------- rules
 
 # query -> set of rule codes that are accepted there, with the reason
@@ -224,6 +226,13 @@ WHITELIST: dict[str, dict[str, str]] = {
         "NESTED_LOOP": "per-part half-avg threshold broadcast",
         "GLOBAL_SORT": "ordered result table (post-agg)",
     },
+}
+
+# Entries of reference-gated queries apply only where those register.
+WHITELIST = {
+    n: rules
+    for n, rules in WHITELIST.items()
+    if n not in REFERENCE_GATED or reference_present(n)
 }
 
 _ARROW_OK = (
